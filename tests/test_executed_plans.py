@@ -95,3 +95,31 @@ def test_covisit_lift_fanout_does_not_multiply_scans(spark, queries):
     final = executed_final_plan(queries["events_covisit_lift"](spark, SF))
     assert scans_by_table(final) == {"events": 2}, final
     assert n_reused(final) >= 2, final
+
+
+def test_robots_filter_one_codegen_rlike_per_list_no_exchange(spark, tmp_path):
+    """robots_filter over a parquet scan stays a single whole-stage
+    codegen'd Filter: no Exchange, and one RLIKE per non-empty pattern
+    list, however many fragments the list holds."""
+    from irstats2_spark.operators.filters import robots_filter
+
+    path = str(tmp_path / "events")
+    spark.createDataFrame(
+        [("Mozilla/5.0 Firefox/120", "8.8.8.8"), ("Googlebot/2.1", "8.8.8.8"),
+         ("Mozilla/5.0 Firefox/120", "100.24.3.4"), (None, None)],
+        "requester_user_agent string, requester_id string",
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    for kwargs, n_rlike, n_kept in (
+        ({}, 2, 2),
+        ({"ip_prefixes": []}, 1, 3),
+        ({"ua_patterns": [], "ip_prefixes": []}, 0, 4),
+    ):
+        out = robots_filter(df, **kwargs)
+        optimized = out._jdf.queryExecution().optimizedPlan().toString()
+        assert optimized.count("RLIKE(") == n_rlike, (kwargs, optimized)
+        final = executed_final_plan(out)
+        assert "Exchange" not in final, (kwargs, final)
+        if n_rlike:
+            assert re.search(r"\*\(\d+\) Filter", final), (kwargs, final)
+        assert out.count() == n_kept, kwargs

@@ -5,13 +5,18 @@ lag-window approximation (SURVEY §7.3)."""
 from __future__ import annotations
 
 import random
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from irstats2_spark.operators.filters import (
+    default_ip_prefixes,
+    default_ua_patterns,
     repeat_filter,
     repeat_filter_window_approx,
     robots_filter,
+    trie_regex,
 )
 
 
@@ -231,24 +236,132 @@ def test_robots_pattern_file_loading(spark, tmp_path):
     assert sorted(r.requester_id for r in kept) == ["192.16.0.1", "8.8.8.8"]
 
 
-def test_robots_distinct_prefilter_parity(spark):
-    """The dedup-before-regex strategy must keep exactly the same rows
-    as the per-row rlike form, including NULL UA/IP rows."""
-    rows = [
-        ("Mozilla/5.0 (real browser)", "1.2.3.4"),
-        ("Googlebot/2.1 (+http://www.google.com/bot.html)", "5.6.7.8"),
-        ("aria2/1.36.0", "9.9.9.9"),
-        ("Mozilla/5.0 ok", "100.24.3.4"),  # robot IP prefix (full list)
-        (None, "2.3.4.5"),
-        ("Mozilla/5.0 ok", None),
+def test_robots_missing_pattern_file_raises(spark, tmp_path):
+    """A mistyped ua_file/ip_file must fail, not fall back to the
+    shipped lists."""
+    df = spark.createDataFrame(
+        [("Mozilla/5.0", "1.2.3.4")],
+        "requester_user_agent string, requester_id string",
+    )
+    for kwarg in ("ua_file", "ip_file"):
+        missing = str(tmp_path / f"no_such_{kwarg}.txt")
+        with pytest.raises(FileNotFoundError, match=f"no_such_{kwarg}"):
+            robots_filter(df, **{kwarg: missing})
+
+
+# --- the prefix-trie regex against the flat alternation it replaces ------
+
+_BROWSER = "mozilla/5.0 (windows nt 10.0; win64; x64) {} chrome/120.0"
+_SYNTAX = set("\\^$()[]{}|*+?")
+
+
+def _flat_ip_patterns(prefixes):
+    """Robots.pm:103-113, restated: sub-/24 prefixes get a '.', dots are
+    escaped."""
+    out = []
+    for p in prefixes:
+        if p.count(".") < 3 and not p.endswith("."):
+            p += "."
+        out.append(p.replace(".", "\\."))
+    return out
+
+
+def _probe_strings(fragments, rng, n_random):
+    """Each fragment with its regex syntax dropped, that text minus its
+    last character, both embedded in a browser UA, and seeded random
+    strings over the characters the lists use."""
+    out = []
+    for frag in fragments:
+        text = "".join(c for c in frag if c not in _SYNTAX)
+        for s in (text, text[:-1]):
+            out += [s, _BROWSER.format(s)]
+    alphabet = "abcdefghijklmnopqrstuvwxyz0123456789./-_ +;:!"
+    out += [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 40)))
+        for _ in range(n_random)
     ]
+    out += [
+        ".".join(str(rng.randint(0, 255)) for _ in range(4))
+        for _ in range(n_random)
+    ]
+    return out
+
+
+def test_trie_regex_matches_flat_join_on_shipped_lists():
+    rng = random.Random(11)
+    for flat in (
+        list(default_ua_patterns()),
+        _flat_ip_patterns(default_ip_prefixes()),
+    ):
+        flat_re = re.compile("|".join(flat))
+        trie_re = re.compile(trie_regex(tuple(flat)))
+        probes = _probe_strings(flat, rng, n_random=2000)
+        hits = [bool(flat_re.search(s)) for s in probes]
+        assert sum(hits) > len(flat)  # the probes reach every fragment
+        bad = [
+            s for s, hit in zip(probes, hits) if bool(trie_re.search(s)) != hit
+        ]
+        assert bad == []
+
+
+def test_robots_filter_keeps_rows_of_flat_rlike_reference(spark):
+    """Java regex semantics: the trie rlike keeps exactly the rows the
+    flat rlike keeps, NULL UAs and IPs included."""
+    rng = random.Random(5)
+    ua_flat = list(default_ua_patterns())
+    ip_flat = _flat_ip_patterns(default_ip_prefixes())
+    uas = _probe_strings(ua_flat, rng, n_random=200)
+    ips = _probe_strings(ip_flat, rng, n_random=200)[: len(uas)]
+    rows = list(zip(uas, ips + ["8.8.8.8"] * (len(uas) - len(ips))))
+    rows += [(None, "100.24.3.4"), (None, "8.8.8.8"), ("googlebot", None)]
+    rows += [("mozilla/5.0", None), (None, None)]
     df = spark.createDataFrame(
         rows, "requester_user_agent string, requester_id string"
     )
-    plain = robots_filter(df).collect()
-    pre = robots_filter(df, distinct_prefilter=True).collect()
-    key = lambda r: (r.requester_user_agent or "", r.requester_id or "")  # noqa: E731
-    assert sorted(map(tuple, plain), key=lambda t: (t[0] or "", t[1] or "")) == sorted(
-        map(tuple, pre), key=lambda t: (t[0] or "", t[1] or "")
+    ua, ip = F.col("requester_user_agent"), F.col("requester_id")
+    reference = df.filter(
+        ~(ua.isNotNull() & F.lower(ua).rlike("|".join(ua_flat)))
+        & ~(ip.isNotNull() & ip.rlike("|".join(ip_flat)))
     )
-    assert len(pre) == 3  # real browser + both NULL rows
+
+    def key(r):
+        return (r[0] is None, r[0] or "", r[1] is None, r[1] or "")
+
+    got = sorted(map(tuple, robots_filter(df).collect()), key=key)
+    want = sorted(map(tuple, reference.collect()), key=key)
+    assert 0 < len(want) < len(rows)
+    assert got == want
+    assert (None, "8.8.8.8") in got and (None, None) in got
+
+
+@pytest.mark.parametrize(
+    "fragments, expected",
+    [
+        ((), None),
+        (("",), None),
+        (("googlebot",), "googlebot"),
+        (("abc+",), "ab(?:c+)"),
+        (("sage\\+\\+",), "sage\\+\\+"),
+        (("^java\\/[0-9]",), "^java\\/[0-9]"),
+        (("[^a]fish", "fishbot"), "[^a]fish|fishbot"),
+        (("bot", "bota"), "bot"),
+        (("bota", "bot", "botb"), "bot"),
+        (("googlebot", "google[_+]web", "gigabot"),
+         "g(?:igabot|oogle(?:(?:[_+]web)|bot))"),
+        (("ab|cd", "abx"), "ab|cd|abx"),
+    ],
+)
+def test_trie_regex_cases(fragments, expected):
+    assert trie_regex(fragments) == expected
+    if expected is not None:
+        flat, trie = re.compile("|".join(fragments)), re.compile(expected)
+        for s in ("abccc", "ab", "sage++", "sage+", "java/7", "x java/7",
+                  "afish", "xfish", "bo", "bota", "googleweb", "google+web",
+                  "gigabot", "cd", "abx"):
+            assert bool(flat.search(s)) == bool(trie.search(s)), s
+
+
+@pytest.mark.parametrize("frag", ["(ab)\\1", "(?<w>ab)\\k<w>", "a|(b)\\1"])
+def test_trie_regex_rejects_backreference(frag):
+    with pytest.raises(ValueError, match="backreference"):
+        trie_regex((frag, "bot"))
